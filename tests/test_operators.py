@@ -7,7 +7,6 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from json2hbase_spark.operators.flatten import kv_flatten
 from json2hbase_spark.operators.hbase import (
     derive_rowkey,
     prepare_hbase_cells,
@@ -30,16 +29,38 @@ def test_hbase_sink_sorted_within_regions(spark):
         [(f"k{i:03d}", {"a": i, "b": i * 2}) for i in range(100)],
         "id STRING, doc MAP<STRING, BIGINT>",
     )
-    kv = kv_flatten(df, "id")
     with tempfile.TemporaryDirectory() as tmp:
-        write_hbase_emulated(kv, tmp, n_regions=4)
+        assert write_hbase_emulated(df, "id", tmp, n_regions=4) == 200
         back = spark.read.parquet(tmp)
         assert back.count() == 200
     # HFile contract: within each partition, rows sorted by (rowkey, cf, qualifier)
-    parts = prepare_hbase_cells(kv, 4).rdd.glom().collect()
+    parts = prepare_hbase_cells(df, "id", 4).rdd.glom().collect()
     for part in parts:
         keys = [(r.rowkey, r.cf, r.qualifier) for r in part]
         assert keys == sorted(keys)
+
+
+def test_hbase_regions_split_on_string_rowkey(spark, tmp_path):
+    """HBase regions are byte-ordered rowkey ranges: BIGINT rowkeys must
+    be range-split as the strings the cells carry ("10" < "9"), not
+    numerically, or region files overlap."""
+    import pyarrow.parquet as pq
+
+    docs = spark.createDataFrame(
+        [(i, i * 3, f"v{i}") for i in range(1, 121)], "rk BIGINT, a BIGINT, b STRING"
+    )
+    out = tmp_path / "table"
+    assert write_hbase_emulated(docs, "rk", str(out), n_regions=4) == 240
+    ranges = []
+    for part in sorted(out.glob("*.parquet")):
+        t = pq.read_table(part, columns=["rowkey", "cf", "qualifier"])
+        keys = list(zip(*(t.column(c).to_pylist() for c in ("rowkey", "cf", "qualifier"))))
+        assert keys == sorted(keys), part.name
+        if keys:
+            ranges.append((keys[0][0], keys[-1][0]))
+    assert len(ranges) > 1
+    # disjoint and ascending in string order, file by file
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:])), ranges
 
 
 def test_join_null_semantics(spark):

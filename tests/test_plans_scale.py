@@ -193,7 +193,7 @@ def test_write_hbase_foreach_with_recording_client(spark):
 
     kv = kv_flatten(df, "rk", cf="d")
     spill = tempfile.mkdtemp(prefix="j2h_hbase_fake_")
-    write_hbase_foreach(kv, lambda: _RecordingClient(spill), batch_size=7, n_regions=4)
+    write_hbase_foreach(df, "rk", lambda: _RecordingClient(spill), batch_size=7, n_regions=4)
 
     written = set()
     for f in glob.glob(os.path.join(spill, "part-*.txt")):
@@ -215,7 +215,6 @@ def test_write_hbase_foreach_flush_cadence(spark):
     per-batch; an unbounded buffer OOMs the executor at 100 TB)."""
     rows = [(f"k{i:03d}", {"a": str(i), "b": str(i * 2)}) for i in range(53)]
     df = spark.createDataFrame(rows, "rk STRING, doc MAP<STRING, STRING>")
-    from json2hbase_spark.operators.flatten import kv_flatten
 
     class _CadenceClient:
         def __init__(self, spill_dir: str):
@@ -233,9 +232,8 @@ def test_write_hbase_foreach_flush_cadence(spark):
             self._fh.write("CLOSE\n")
             self._fh.close()
 
-    kv = kv_flatten(df, "rk", cf="d")
     spill = tempfile.mkdtemp(prefix="j2h_hbase_cad_")
-    write_hbase_foreach(kv, lambda: _CadenceClient(spill), batch_size=8, n_regions=4)
+    write_hbase_foreach(df, "rk", lambda: _CadenceClient(spill), batch_size=8, n_regions=4)
 
     written = []
     for f in glob.glob(os.path.join(spill, "cad-*.txt")):
@@ -258,7 +256,6 @@ def test_write_hbase_foreach_retries_transient_failure(spark):
     exhausted the task must fail loudly, never drop cells silently."""
     rows = [(f"k{i:03d}", {"a": str(i)}) for i in range(20)]
     df = spark.createDataFrame(rows, "rk STRING, doc MAP<STRING, STRING>")
-    from json2hbase_spark.operators.flatten import kv_flatten
 
     class _FlakyClient:
         def __init__(self, spill_dir: str, fail_always: bool = False):
@@ -279,10 +276,9 @@ def test_write_hbase_foreach_retries_transient_failure(spark):
         def close(self):
             pass
 
-    kv = kv_flatten(df, "rk", cf="d")
     spill = tempfile.mkdtemp(prefix="j2h_hbase_flaky_")
     write_hbase_foreach(
-        kv, lambda: _FlakyClient(spill), batch_size=6, n_regions=2, max_retries=2
+        df, "rk", lambda: _FlakyClient(spill), batch_size=6, n_regions=2, max_retries=2
     )
     written = []
     for f in glob.glob(os.path.join(spill, "flaky-*.txt")):
@@ -293,7 +289,8 @@ def test_write_hbase_foreach_retries_transient_failure(spark):
     spill2 = tempfile.mkdtemp(prefix="j2h_hbase_flaky2_")
     with pytest.raises(Exception):
         write_hbase_foreach(
-            kv,
+            df,
+            "rk",
             lambda: _FlakyClient(spill2, fail_always=True),
             batch_size=6,
             n_regions=2,
