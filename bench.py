@@ -79,10 +79,10 @@ def main() -> None:
         # "j107 first-touch profile"): the spike is DATA-INDEPENDENT
         # codegen/JIT (14.9 s cold at sf0.001 vs 12.2 s at sf0.1;
         # steady state 2.3 s) and j107 alphabetically LEADS the
-        # _dup_edges/label-propagation family, so it pays the whole
-        # family's first-touch in bench order — warm it like the other
-        # codegen-heavy families (also warms j20/j26/j108's shared
-        # edge+propagation kernels)
+        # near-dup family, so it pays the whole family's first-touch in
+        # bench order — warm it like the other codegen-heavy families
+        # (also warms the per-block near-dup kernel j20/j26/j85 share
+        # and the join/agg shapes of j108's propagation)
         "j107_cluster_safe_split",
         # round-11 adjudication of the j127 cold-start spike (VERDICT
         # r10: 124.5 s first run in the driver bench, steady 13-17 s):

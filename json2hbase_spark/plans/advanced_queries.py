@@ -3,9 +3,11 @@ components, iterative k-means, and skew-salted aggregation — the
 "beyond single-pass SQL" tier of the engine (SURVEY.md §2 J20/J21/C10).
 
 Scale notes inline per operator; the common theme is that iteration
-happens as a bounded chain of narrow joins/aggregations (each one a
-normal shuffle Catalyst can plan), never as driver-side loops over
-collected data.
+never runs as driver-side loops over collected data. Near-dup
+components, whose graph never leaves one 40-char block, iterate inside
+one row per block after a single shuffle (`_BLOCK`); graphs without
+such a bound iterate as a chain of narrow joins/aggregations, each a
+normal shuffle Catalyst can plan (`_labels_converged`, k-means).
 """
 
 from __future__ import annotations
@@ -14,16 +16,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from json2hbase_spark.functions.exact import QCENT_AVG
-from json2hbase_spark.io import load, widen
+from json2hbase_spark.io import load
 from json2hbase_spark.materialize import materialize
-from json2hbase_spark.operators.dedup import char_shingles, normalize_text
+from json2hbase_spark.operators.dedup import normalize_text
 from json2hbase_spark.registry import query
 
 # bounded propagation depth: min-label reaches everything within
-# COMPONENT_HOPS edges. Edges only exist inside a 40-char-prefix
-# block (docs in different blocks never meet), so component diameter
-# is bounded by block size (~2-3 docs in the fixtures); 3 hops covers
-# it while keeping the op deterministic and oracle-expressible
+# COMPONENT_HOPS edges. Edges only exist inside a 40-char-prefix block,
+# so component diameter is bounded by block size (~2-3 docs in the
+# fixtures); 3 hops covers it while keeping the op oracle-expressible
 # (bounded recursion in DuckDB).
 COMPONENT_HOPS = 3
 
@@ -36,35 +37,71 @@ COMPONENT_HOPS = 3
 BROADCAST_EDGE_LIMIT = 2_000_000
 
 
-def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic near-dup edge set: the same blocked exact-Jaccard
-    construction as j2v (no hash functions → engine-independent)."""
+def _let(var: str, value: str, body: str) -> str:
+    """`body` with `var` bound to `value`, evaluated once per row (a
+    projected column read once is inlined, i.e. per lambda element)."""
+    return f"transform(array({value}), {var} -> {body})[0]"
+
+
+# The per-block kernel as SQL text over `docs` = array<(doc_id, norm)>:
+# sd = each doc's id and distinct 8-char shingles; ij = verified pairs
+# as index pairs into sd (doc_a < doc_b and the DuckDB twin's Jaccard
+# ≥ 0.3 double expression); adj = each doc's neighbour indexes; then
+# the pairs as doc ids, and COMPONENT_HOPS synchronous min-label
+# rounds over the node array, kept for every doc with an edge.
+_SHINGLED = (
+    "transform(docs, d -> named_struct('id', d.doc_id, 'sh', array_distinct("
+    "transform(sequence(1, length(d.norm) - 7), i -> substr(d.norm, i, 8)))))"
+)
+_PAIR_INDEXES = (
+    "flatten(transform(sd, (a, i) -> transform(filter(sequence(0, size(sd) - 1),"
+    " j -> a.id < sd[j].id AND "
+    + _let("n", "size(array_intersect(a.sh, sd[j].sh))",
+           "CAST(n AS DOUBLE) / (size(a.sh) + size(sd[j].sh) - n) >= 0.3D")
+    + "), j -> named_struct('i', i, 'j', j))))"
+)
+_ADJACENCY = (
+    "transform(sd, (d, k) -> transform(filter(ij, p -> p.i = k OR p.j = k), p -> p.i + p.j - k))"
+)
+_PAIRS_AND_LABELS = (
+    "named_struct('pairs', transform(ij, p -> named_struct('doc_a', sd[p.i].id,"
+    " 'doc_b', sd[p.j].id)), 'labels', aggregate(sequence(1, "
+    f"{COMPONENT_HOPS}), transform(sd, d -> d.id), (lab, r) -> transform(adj,"
+    " (nb, k) -> array_min(concat(array(lab[k]), transform(nb, j -> lab[j])))),"
+    " lab -> transform(filter(sequence(0, size(sd) - 1), k -> size(adj[k]) > 0),"
+    " k -> named_struct('node', sd[k].id, 'label', lab[k]))))"
+)
+_BLOCK = _let("sd", _SHINGLED, _let("ij", _PAIR_INDEXES, _let("adj", _ADJACENCY, _PAIRS_AND_LABELS)))
+
+
+def _docs_by_block(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Input of the near-dup kernel `_BLOCK`: one row per 40-char block
+    with >1 doc, `docs` = array<(doc_id, norm)>. Edges exist only inside
+    a block, so this one shuffle of the text is the whole graph's
+    (shingles, ~9x the text, are built after it). `_BLOCK` gives each
+    row `pairs` (doc_a, doc_b) and `labels` (node, label). Read it as
+    `inline(<_BLOCK>.pairs)`: a generator over a projected column gets
+    an inferred `size > 0` filter whose pushdown recomputes the kernel.
+
+    Scale contract: one block is one row and must fit one task. Pair
+    checks are O(b²) per block of b docs, as the block-keyed
+    self-join's were; adjacency is O(b·e) for e edges, each label round
+    O(b + e). The lambdas are SQL text: one parse per build, where
+    Column-built lambdas cost a py4j round-trip per expression node."""
     docs = load(spark, sf_dir, "documents")
-    normed = widen(docs).select("doc_id", normalize_text(F.col("text")).alias("norm")).filter(
+    normed = docs.select("doc_id", normalize_text(F.col("text")).alias("norm")).filter(
         F.length("norm") >= 8
     )
-    sh = normed.select(
-        "doc_id",
-        F.substring("norm", 1, 40).alias("block"),
-        char_shingles(F.col("norm"), 8).alias("shingles"),
-    )
-    # materialized for the same reason as j2v: the self-join's two
-    # sides would otherwise shingle the corpus twice (HOF plans defeat
-    # ReuseExchange)
-    sh = materialize(sh)
-    a = sh.select(F.col("block"), F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(
-        F.col("block").alias("block_b"), F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("double") / union
     return (
-        a.join(b, (F.col("block") == F.col("block_b")) & (F.col("doc_a") < F.col("doc_b")))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.3)
-        .select("doc_a", "doc_b")
+        normed.groupBy(F.substring("norm", 1, 40).alias("block"))
+        .agg(F.collect_list(F.struct("doc_id", "norm")).alias("docs"))
+        .where(F.size("docs") > 1)
     )
+
+
+def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic near-dup edge set `(doc_a, doc_b)`: `_BLOCK`'s pairs."""
+    return _docs_by_block(spark, sf_dir).selectExpr(f"inline({_BLOCK}.pairs)")
 
 
 DUCK_DUP_EDGES = """
@@ -115,16 +152,10 @@ DUCK_COMP_CTES = (
 
 
 def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(node, label) assignment of every near-dup-graph node to its
-    component's min doc_id — shared by j20 (cluster stats), j26
-    (canonical-doc pick) and j107 (cluster-safe split)."""
-    # materialize the edge set once: every propagation hop references
-    # it, and without truncation the shingle-join subtree would be
-    # re-evaluated per hop (measured 20.8s -> ~3s at sf0.01). The edge
-    # list is the small invariant of the iteration — exactly what you
-    # checkpoint at 100 TB too.
-    edges = materialize(_dup_edges(spark, sf_dir))
-    return _labels_from_edges(edges)
+    """(node, label): every near-dup-graph node's min doc_id within
+    COMPONENT_HOPS edges (`_BLOCK`'s labels) — shared by j20 (cluster
+    stats), j26 (canonical-doc pick) and j85 (cluster-size histogram)."""
+    return _docs_by_block(spark, sf_dir).selectExpr(f"inline({_BLOCK}.labels)")
 
 
 def _labels_converged(edges: DataFrame, rounds: int = 8) -> DataFrame:
@@ -266,29 +297,6 @@ def _labels_converged(edges: DataFrame, rounds: int = 8) -> DataFrame:
     )
 
 
-def _labels_from_edges(edges: DataFrame) -> DataFrame:
-    """Min-label propagation over an already-materialized edge table
-    (callers that also need the edges reuse one materialization)."""
-    nodes = (
-        edges.select(F.col("doc_a").alias("node"))
-        .unionByName(edges.select(F.col("doc_b").alias("node")))
-        .distinct()
-    )
-    bi = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionByName(
-        edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for _ in range(COMPONENT_HOPS):
-        nbr = (
-            bi.join(labels.select(F.col("node").alias("dst"), "label"), "dst")
-            .select(F.col("src").alias("node"), "label")
-        )
-        labels = (
-            labels.unionByName(nbr).groupBy("node").agg(F.min("label").alias("label"))
-        )
-    return labels
-
-
 @query(
     "j20_dup_components",
     oracle=DUCK_COMP_CTES
@@ -303,20 +311,17 @@ def _labels_from_edges(edges: DataFrame) -> DataFrame:
 )
 def j20_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters as connected components of the verified
-    near-dup graph: iterative min-label propagation, one narrow
-    join + min-agg per hop (the map-reduce CC algorithm; large-star/
-    small-star is the optimization at web scale, min-label is the
-    right shape for the small-diameter clusters dedup produces).
-    Bounded at COMPONENT_HOPS so the plan is static and the DuckDB
-    twin (bounded recursive CTE) computes the identical fixpoint."""
+    near-dup graph: min-label propagation bounded at COMPONENT_HOPS, as
+    in the DuckDB twin's bounded recursive CTE. Components never leave
+    their 40-char block, so pairs and label rounds run inside one row
+    per block (`_BLOCK`): one shuffle of the text, one on the label for
+    the stats — no join, no materialize."""
     labels = _component_labels(spark, sf_dir)
     return labels.groupBy(F.col("label").alias("component")).agg(
         F.count("*").alias("n_docs"),
         F.min("node").alias("min_doc"),
         F.max("node").alias("max_doc"),
     )
-
-
 
 
 def _duck_sqdist(a: str, b: str) -> str:
@@ -617,10 +622,11 @@ def j26_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-document selection per duplicate cluster: the step a
     dedup pipeline runs AFTER clustering — keep the highest-quality
     member (j12's heuristic score, rounded to 4 so ranking is
-    engine-stable; ties to the lowest doc_id) and drop the rest. One
-    join of the (small) component labels against per-doc quality plus
-    one window — the cluster table is tiny relative to the corpus, so
-    at 100 TB this is a broadcast join against a quality scan."""
+    engine-stable; ties to the lowest doc_id) and drop the rest. The
+    labels are j20's (per-block kernel, no materialize); one join of
+    them against per-doc quality plus one window — the cluster table
+    is tiny relative to the corpus, so at 100 TB this is a broadcast
+    join against a quality scan."""
     from json2hbase_spark.operators.text import quality_features, whitespace_tokens
 
     labels = _component_labels(spark, sf_dir)
@@ -707,23 +713,16 @@ def j107_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes < 0x{EVAL_HEX_CUT}) keeps the split rerun-identical and
     engine-agnostic (j83's convention) at ≈10% eval.
 
-    Plan: reuses the banded near-dup edge table (materialized ONCE,
-    shared by the label propagation and the straddle audit), j20's
-    bounded min-label propagation, one left join of labels onto the
-    corpus, and two id-keyed joins of the tiny edge set for the
-    audit. The split ASSIGNMENT is materialized before the audit
-    reads it: three consumers (both straddle-join sides + the per-
-    split rollup) would otherwise each re-execute the propagation
-    chain — measured as a reproducible 12 s cold run vs 2.3 s steady
-    at sf0.1 (26 SMJs / 75 exchanges of codegen + shuffle warm;
-    adjudicated round 10, BASELINE.md). Materializing is also the
-    production posture: the split assignment IS the artifact a
-    trainer consumes, so at 100 TB you checkpoint this narrow
-    (doc_id, rep, split) table and audit the checkpoint. With the cut
-    the whole query is: dedup cost + one label join + two id-keyed
-    audit joins of a flat table."""
-    edges = materialize(_dup_edges(spark, sf_dir))
-    labels = _labels_from_edges(edges)
+    Plan: the per-block near-dup kernel (`_BLOCK`) is materialized
+    once; the audit edges and j20's labels are both read from it, and
+    one left join puts the labels on the corpus. The split ASSIGNMENT
+    is materialized before its three consumers (both straddle-join
+    sides, the per-split rollup) read it — also the production
+    posture: the (doc_id, rep, split) table IS the artifact a trainer
+    consumes, so at 100 TB it is checkpointed and audited."""
+    blocks = materialize(_docs_by_block(spark, sf_dir).selectExpr(f"{_BLOCK} AS blk"))
+    edges = blocks.selectExpr("inline(blk.pairs)")
+    labels = blocks.selectExpr("inline(blk.labels)")
     docs = load(spark, sf_dir, "documents").select("doc_id")
     rep = docs.join(
         labels.select(F.col("node").alias("doc_id"), "label"), "doc_id", "left"

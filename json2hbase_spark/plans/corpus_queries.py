@@ -954,9 +954,9 @@ def j47_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     change the result, while the damping arithmetic stays plain IEEE.
     Each iteration is one join + one hash agg with the per-iteration
     rank table materialized (flat lineage, same posture as j21); the
-    edge set materializes once — exactly the 100 TB checkpointing
-    shape. Quantization bias is 1e-12 per edge — epsilon against
-    PR values ≥ 0.15/N."""
+    edge set (the pairs of j20's per-block kernel) materializes once —
+    exactly the 100 TB checkpointing shape. Quantization bias is 1e-12
+    per edge — epsilon against PR values ≥ 0.15/N."""
     edges = materialize(_dup_edges(spark, sf_dir))
     bi = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionByName(
         edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))

@@ -552,10 +552,10 @@ def j85_dup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     giant blobs) — the number that decides KEEP-ONE vs KEEP-NONE
     policy and flags boilerplate explosions (a giant component is
     almost never real duplication; it is a template). Reuses j20's
-    bounded min-label propagation verbatim (same edges, same
-    fixpoint — one extra hash agg on top), so the 100 TB posture is
-    j20's: banded edge set materialized once, narrow join + min-agg
-    per hop, histogram over components (≪ docs)."""
+    labels verbatim (same edges, same bounded propagation — one extra
+    hash agg on top), so the 100 TB posture is j20's: one shuffle of
+    the text by block, pairs and label rounds inside each block row,
+    histogram over components (≪ docs)."""
     from json2hbase_spark.plans.advanced_queries import _component_labels
 
     sizes = (
@@ -752,11 +752,11 @@ def j87_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (degree → node count) — the early-warning signal j85's component
     histogram confirms: a fat degree tail means template/boilerplate
     contamination BEFORE paying for component propagation, from one
-    agg over the edge list (no iteration at all). Reuses j20/j26's
-    edge set verbatim. Plan: edges materialize once, the degree count
-    and histogram are two hash aggs over 2·|E| rows — at 100 TB this
-    is the cheap triage that decides whether j20's iterative pass is
-    even needed."""
+    agg over the edge list (no label rounds at all). Reuses j20/j26's
+    edge set verbatim (the per-block kernel's pairs). Plan: edges
+    materialize once, the degree count and histogram are two hash aggs
+    over 2·|E| rows — at 100 TB this is the cheap triage that decides
+    whether j20's label rounds are even needed."""
     from json2hbase_spark.plans.advanced_queries import _dup_edges
 
     edges = materialize(_dup_edges(spark, sf_dir))

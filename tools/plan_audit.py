@@ -91,7 +91,7 @@ AUDIT = {
     "d16_weighted_median": "grouped bucketed prefix sum (quality-band bucket) + broadcast totals + filter/min agg — exact weighted median with no per-source SinglePartition window",
     "e13_cumulative_uniques": "user-keyed min agg (map-side combined) + day aggs; running sum over the bounded day domain — the justified SinglePartition category, events never globally sort",
     "j106_heaps_law": "first-seen identity (token-keyed min agg) + bucketed prefix sums on the monotone doc_id bucket + one scalar OLS agg — no SinglePartition window, no global sort",
-    "j107_cluster_safe_split": "edge table materialized once, shared by min-label propagation and the straddle audit; corpus-side one left join; audit joins keyed on the tiny edge set",
+    "j107_cluster_safe_split": "per-block near-dup kernel materialized once and read twice (inline pairs for the straddle audit, inline labels for the materialized split table); no propagation join; the first audit join broadcasts the edge side",
     "j108_winnow_clusters": "pair table materialized once; converged pointer-doubling label rounds over the pair set only (checkpointed every other round); convergence assert broadcast onto the output; cluster stats are two bounded hash aggs",
     "j109_heaps_checkpoints": "j106's shared bucketed-cumsum curve + 1-row total broadcast + integer band arithmetic into one hash agg; the only window is the ≤10-row checkpoint-domain lag (justified SinglePartition)",
     "j110_code_detect": "ONE exchange in the whole plan: codegen'd split + array-HOF line tests (no UDF, no explode) into a partial-combined hash agg on (source, verdict)",
@@ -169,18 +169,14 @@ SMJ_JUSTIFIED = {
     "c2_join_smj": "the deliberate sort-merge demonstration",
     "c13_exists_chain": "decorrelated semi/anti joins of two fact tables",
     "c15_join_bloom_pruned": "broadcast disabled on purpose to force the bloom path",
-    "j20_dup_components": "iterative label propagation: edges vs labels, both corpus-sized",
-    "j26_canonical_pick": "joins j20's components back to the corpus",
     "j43_semdedup": "cell-blocked pair join, both sides corpus-sized",
     "j49_dedup_recall": "candidate set vs ground-truth pairs, both grow with corpus",
     "j51_dataset_diff": "full-outer snapshot diff, both snapshots corpus-sized",
     "j73_hybrid_rrf": "full-outer fusion of two top-k lists — FULL OUTER has no broadcast form, and both sides are bounded at RRF_CAND=50 rows",
     "j81_band_tuning": "block-keyed candidate pair join — both sides corpus-sized (j43's category)",
-    "j85_dup_cluster_stats": "j20's label propagation reused verbatim: edges vs labels, both corpus-sized",
-    "j87_graph_degree_stats": "degree count over the j20 edge set — the edge materialize carries j20's join shape",
     "j89_hapax_docs": "occurrence stream re-joined to its own vocabulary — both sides grow with the corpus",
-    "j107_cluster_safe_split": "j20's label propagation reused (edges vs labels, both corpus-sized) + the straddle audit's two id-keyed joins of the edge set against the corpus-sized split table — every SMJ side grows with the corpus, none is broadcastable",
-    "j108_winnow_clusters": "j20's label propagation over the winnow pair table (edges vs labels, both grow with duplication density × corpus) + the cluster-stat joins keyed on the same pair set",
+    "j107_cluster_safe_split": "the straddle audit's second id-keyed join: edges tagged with side a's split vs the corpus-sized split table — both sides grow with the corpus (the first audit join broadcasts the materialized edge set)",
+    "j108_winnow_clusters": "_labels_converged's label propagation over the winnow pair table (edges vs labels, both grow with duplication density × corpus) + the cluster-stat joins keyed on the same pair set",
     "j117_cross_source_clusters": "j48's banded candidate pair join (both sides corpus-sized, j43's category) + _labels_converged over the verified edge set (edges vs labels, j108's category); the broadcast fast path takes over below BROADCAST_EDGE_LIMIT at runtime",
     "j128_whiten_rescore": "j16's LSH-bucket-blocked pair self-join on the whitened residual table — both sides corpus-sized (j43's category); the eigvec itself broadcasts",
     "j132_incremental_winnow": "the fh containment join (new-batch fingerprints vs the persisted corpus index — both grow with data, j49's category) plus the doc-keyed audit joins of its batch-sized aggregates",
